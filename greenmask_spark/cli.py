@@ -300,7 +300,7 @@ def _table_metadata(cfg: dict) -> tuple[dict, dict]:
 
 
 def cmd_dump(args) -> int:
-    from greenmask_spark.plan import apply_plans, build_plan
+    from greenmask_spark.plan import apply_plans, build_plan, expand_references
     from greenmask_spark.sources.io import write_dump
     from greenmask_spark.subset import SubsetPlanner
 
@@ -310,7 +310,7 @@ def cmd_dump(args) -> int:
     graph, conditions = _fk_graph(cfg, tables)
     if conditions:
         tables = SubsetPlanner(graph, conditions).plan(tables)
-    plans = build_plan(cfg)
+    plans = expand_references(build_plan(cfg), graph)
     unknown = sorted({p.table for p in plans} - set(tables))
     if unknown:
         print(f"dump: config references unknown tables {unknown} "
@@ -372,14 +372,15 @@ def cmd_restore(args) -> int:
 
 
 def cmd_validate(args) -> int:
-    from greenmask_spark.plan import apply_plan, build_plan
+    from greenmask_spark.plan import apply_plan, build_plan, expand_references
     from greenmask_spark.validate import validate_plans
     from greenmask_spark.validate.diff import diff_report
 
     cfg = load_config(args.config)
     spark = _spark("greenmask-spark-validate")
     tables = _load_source(spark, cfg)
-    plans = build_plan(cfg)
+    graph, _ = _fk_graph(cfg, tables)
+    plans = expand_references(build_plan(cfg), graph)
     pks = {
         t["name"]: tuple(t.get("primary_key", ()))
         for t in cfg.get("tables", [])

@@ -284,16 +284,12 @@ def lsh_recall_eval(
     # both id-pair sets feed 2-3 consumers (counts + semi-joins):
     # materialize once — they are (id, id) slivers even when the sample
     # corpus is large
-    cached: list = []
     truth = (
-        ngram_jaccard(src, all_pairs, text_col, id_col, k,
-                      reuse="persist", _persisted=cached)
+        ngram_jaccard(src, all_pairs, text_col, id_col, k)
         .filter(F.col("jaccard") >= float(min_jaccard))
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
-    for h in cached:
-        h.unpersist()
     cand = minhash_candidates(
         src, text_col, id_col, num_perm, bands, k
     ).localCheckpoint(eager=True)
@@ -465,13 +461,12 @@ def dedup_against(
         # cand feeds FOUR consumers (both id projections + twice inside
         # the two-stream Jaccard) and each hash stream feeds two
         # (sizes + intersection); ReuseExchange does not unify them
-        # (see the measured 8-scans note in ngram_jaccard), so without
-        # a persist the shard would re-shingle and the band join re-run
-        # once per consumer — defeating the prepared path's purpose.
-        # Same convention as ngram_jaccard: MEMORY_AND_DISK (the rows
-        # are (id, id) / (id, int) slivers), handles surfaced via
-        # ``_persisted`` for callers that want to unpersist after
-        # their action.
+        # (alias-divergent attribute ids), so without a persist the
+        # shard would re-shingle and the band join re-run once per
+        # consumer — defeating the prepared path's purpose.
+        # MEMORY_AND_DISK (the rows are (id, id) / (id, int) slivers),
+        # handles surfaced via ``_persisted`` for callers that want to
+        # unpersist after their action.
         from pyspark import StorageLevel
 
         cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
@@ -519,8 +514,7 @@ def dedup_against(
             tag("n:")(F.col("id_a")).alias("id_a"),
             tag("r:")(F.col("id_b")).alias("id_b"),
         )
-        verified = ngram_jaccard(union, tagged_cand, text_col, id_col, k,
-                                 reuse="recompute")
+        verified = ngram_jaccard(union, tagged_cand, text_col, id_col, k)
         drop_keys = verified.filter(
             F.col("jaccard") >= float(min_jaccard)
         ).select(F.expr("substring(id_a, 3)").alias("__drop")).distinct()
@@ -838,18 +832,17 @@ def ngram_jaccard(
     k: int = 5,
     strategy: str = "agg",
     broadcast_max_rows: int = 1_000_000,
-    reuse: str = "persist",
-    _persisted: list | None = None,
 ) -> DataFrame:
     """Exact hashed-k-shingle Jaccard for candidate pairs (verification).
 
     Two physical strategies with identical results:
 
-    - ``agg`` (default — the scale path): explode to (doc, hash) rows,
-      count common hashes per candidate pair via two id-keyed joins, then
-      |A∩B| / (|A|+|B|−|A∩B|). The shuffles carry only (id, int) rows —
-      no arrays — so this survives corpora where the broadcast variant
-      OOMs.
+    - ``agg`` (default — the scale path): join each candidate pair to
+      its A-side (doc, hash) rows, look each hash up in the B side,
+      and count |A|, |A∩B| per pair in one aggregation; |B| joins from
+      per-doc sizes → |A∩B| / (|A|+|B|−|A∩B|). The shuffles carry only
+      (id, int) rows — no arrays — so this survives corpora where the
+      broadcast variant OOMs.
     - ``broadcast`` (opt-in for small corpora): the doc→hash-set map is
       broadcast so the pair stream never shuffles arrays. Only valid
       while the whole shingle map fits a broadcast — NOT the 100 TB path.
@@ -897,46 +890,26 @@ def ngram_jaccard(
         )
     if strategy != "agg":
         raise ValueError(f"unknown strategy {strategy!r}")
-    # the flat shingle stream feeds THREE consumers (a-side, b-side,
-    # sizes) and the candidate pairs feed two; Spark's ReuseExchange does
-    # NOT unify them (alias-divergent attribute ids), so without a persist
-    # the corpus would be scanned + shingle-hashed + distinct-shuffled
-    # once per consumer (8 scans / 12 exchanges measured at sf0.01).
-    # Both streams are (id, int) rows — a sliver of the corpus — and
-    # MEMORY_AND_DISK spills rather than OOMs at scale. Lazy: no action
-    # happens at query construction. The cache entries live until the
-    # session drops them (LRU) — a long-lived session iterating over
-    # many corpora/thresholds should pass reuse="recompute" (or call
-    # spark.catalog.clearCache() between runs) to avoid accumulating
-    # dead cached partitions. Callers that materialize the result and
-    # want the cache back immediately (dedup_clusters does) pass a
-    # ``_persisted`` list; the cached handles are appended for them to
-    # unpersist() once an action has run.
-    if reuse == "persist":
-        from pyspark import StorageLevel
-
-        ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-        if _persisted is not None:
-            _persisted.extend((ex, pairs))
-    elif reuse != "recompute":
-        raise ValueError(f"unknown reuse {reuse!r}: persist|recompute")
-    sizes = ex.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    ex_a = ex.select(F.col("id").alias("id_a"), "h")
-    ex_b = ex.select(F.col("id").alias("id_b"), "h")
-    inter = (
-        pairs.join(ex_a, "id_a")
-        .join(ex_b, ["id_b", "h"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    # nothing is persisted: the pairs have ONE consumer, and the shingle
+    # stream is recomputed per consumer from ``df`` (a caller that reads
+    # an expensive lineage checkpoints it first, as dedup_clusters and
+    # fuzzy_dedup do). Each pair's A-side rows count |A|; a left lookup
+    # of every (id_b, h) counts |A∩B|; a per-doc size join gives |B| and
+    # drops pairs whose id is absent from ``df``. A NULL-text doc has
+    # one (id, NULL) row: it counts toward its size, never toward an
+    # intersection. (Folding both sides' rows into (pair, h) groups,
+    # with one stream consumer, aggregates twice the rows: 3-4x slower
+    # at 49k candidate pairs on 4 vCPUs.)
+    sizes_b = ex.groupBy(F.col("id").alias("id_b")).agg(
+        F.count(F.lit(1)).alias("sz_b")
     )
+    in_b = ex.select(F.col("id").alias("id_b"), "h", F.lit(1).alias("hit"))
     return (
-        pairs.join(inter, ["id_a", "id_b"], "left")
-        .na.fill({"inter": 0})
-        .join(sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")),
-              "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")),
-              "id_b")
+        pairs.join(ex.withColumnRenamed("id", "id_a"), "id_a")
+        .join(in_b, ["id_b", "h"], "left")
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("sz_a"), F.count("hit").alias("inter"))
+        .join(sizes_b, "id_b")
         .select(
             "id_a",
             "id_b",
@@ -1549,7 +1522,6 @@ def dedup_clusters(
     bands: int = 4,
     k: int = 5,
     min_jaccard: float | None = None,
-    reuse: str = "persist",
 ) -> DataFrame:
     """Full fuzzy-dedup clustering: MinHash-LSH candidate pairs →
     [optional exact-Jaccard verification] → connected components →
@@ -1564,26 +1536,12 @@ def dedup_clusters(
     BEFORE clustering, so band-collision false positives can't chain
     unrelated docs into one giant component.
 
-    ``reuse`` feeds the verification stage's ``ngram_jaccard``; with the
-    default "persist" the intermediate caches are dropped here as soon
-    as the verified pair set is materialized (localCheckpoint barrier),
-    so long-lived sessions don't accumulate dead cache entries.
+    The input is read once (see ``_near_dup_components``); the
+    returned frame reads that checkpoint, not ``df``'s lineage.
     """
-    pairs = minhash_candidates(df, text_col, id_col, num_perm, bands, k)
-    if min_jaccard is not None:
-        cached: list = []
-        verified = ngram_jaccard(
-            df, pairs, text_col, id_col, k, reuse=reuse, _persisted=cached
-        )
-        # eager barrier: pairs are a sliver (two ints per candidate) and
-        # connected_components would checkpoint its input anyway — after
-        # this action the shingle/pair caches are dead weight; free them
-        pairs = verified.filter(
-            F.col("jaccard") >= float(min_jaccard)
-        ).select("id_a", "id_b").localCheckpoint(eager=True)
-        for h in cached:
-            h.unpersist()
-    cc = connected_components(pairs, "id_a", "id_b")
+    df, cc = _near_dup_components(
+        df, text_col, id_col, num_perm, bands, k, min_jaccard
+    )
     ids = df.select(F.col(id_col).alias("node"))
     return (
         ids.join(cc, "node", "left")
@@ -1602,12 +1560,44 @@ def fuzzy_dedup(
     bands: int = 4,
     k: int = 5,
     min_jaccard: float | None = None,
-    reuse: str = "persist",
 ) -> DataFrame:
     """Keep one representative (min id) per fuzzy-duplicate cluster —
-    the end-to-end pipeline a training-data run actually executes."""
-    clusters = dedup_clusters(
-        df, text_col, id_col, num_perm, bands, k, min_jaccard, reuse=reuse
+    the end-to-end pipeline a training-data run actually executes.
+    Every component member other than its root (the minimum id) drops
+    in one anti-join; documents with a NULL id drop too (they belong
+    to no cluster, so none of them is a representative)."""
+    df, cc = _near_dup_components(
+        df, text_col, id_col, num_perm, bands, k, min_jaccard
     )
-    keep = clusters.filter(F.col(id_col) == F.col("cluster_id")).select(id_col)
-    return df.join(keep, id_col, "left_semi")
+    dups = cc.filter(F.col("node") != F.col("component")).select(
+        F.col("node").alias(id_col)
+    )
+    return df.filter(F.col(id_col).isNotNull()).join(
+        dups, id_col, "left_anti"
+    )
+
+
+def _near_dup_components(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_perm: int,
+    bands: int,
+    k: int,
+    min_jaccard: float | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(checkpointed ``df``, connected components of its [verified]
+    candidate pairs). The input is materialized ONCE with an eager
+    localCheckpoint: the signature pass, the verification stream and
+    the caller's final join all read it instead of each re-running the
+    upstream lineage (a chain of text filters in a corpus pipeline),
+    and a non-deterministic input is pinned to one evaluation. The
+    verified pairs stay lazy: ``connected_components`` checkpoints its
+    input edges itself."""
+    df = df.localCheckpoint(eager=True)
+    pairs = minhash_candidates(df, text_col, id_col, num_perm, bands, k)
+    if min_jaccard is not None:
+        pairs = ngram_jaccard(df, pairs, text_col, id_col, k).filter(
+            F.col("jaccard") >= float(min_jaccard)
+        ).select("id_a", "id_b")
+    return df, connected_components(pairs, "id_a", "id_b")

@@ -6,13 +6,18 @@ The reference's config drives per-table transformer chains
 (internal/domains/config.go); this drives the corpus toolkit the same
 way: declarative steps, validated up front, lazily composed so Catalyst
 sees the whole pipeline (filters reorder/push down across steps).
-Composition is lazy with three declared exceptions: ``fuzzy_dedup`` and
+Composition is lazy with three declared exceptions: ``fuzzy_dedup``
+(and ``cluster_split``, which clusters the same way) and
 ``semantic_dedup`` contain an iterative connected-components fixpoint
 whose rounds EXECUTE during composition (eager checkpoints + a
 convergence probe per round) — place them after the cheap filters so
-the fixpoint runs on the already-reduced corpus — and ``checkpoint``
-writes the pipeline state to parquet eagerly on purpose (lineage cut /
-resume point).
+the fixpoint runs on the already-reduced corpus. ``fuzzy_dedup`` and
+``cluster_split`` also materialize their input once with an eager
+localCheckpoint, which the signatures, the verification and the
+cluster join read instead of re-running the upstream steps; after
+``fuzzy_dedup`` every later step and the sink read it too. The third
+exception, ``checkpoint``, writes the pipeline state to parquet eagerly on purpose
+(lineage cut / resume point).
 
 Example::
 

@@ -532,3 +532,32 @@ def test_cli_dump_columns_type_override(spark, sf_dir, tmp_path, capsys):
     out = spark.read.parquet(os.path.join(dump_dir, "orders"))
     assert out.schema["o_orderkey"].dataType.simpleString() == "int"
     assert out.schema["o_custkey"].dataType.simpleString() == "string"
+
+
+def test_cli_dump_applies_for_references(spark, sf_dir, tmp_path, capsys):
+    """A Hash on the parent key flagged apply_for_references is re-bound
+    onto every referencing FK column, so the dumped orders still join to
+    the dumped customers (reference: config_builder.go getRefTables)."""
+    dump_dir = str(tmp_path / "refdump")
+    cfg = _cfg(sf_dir, dump_dir)
+    # Hash masks text: both key columns are read as text
+    cfg["tables"][0]["columns_type_override"] = {"c_custkey": "text"}
+    cfg["tables"][0]["transformers"].append(
+        {"name": "Hash", "salt": "cli-s1",
+         "params": {"column": "c_custkey", "function": "sha256",
+                    "apply_for_references": True}})
+    cfg["tables"].append({"name": "orders",
+                          "columns_type_override": {"o_custkey": "text"}})
+    cfg_path = str(tmp_path / "cfg_ref.yml")
+    with open(cfg_path, "w") as fh:
+        yaml.safe_dump(cfg, fh)
+    assert main(["dump", "--config", cfg_path]) == 0
+    capsys.readouterr()
+    cust = spark.read.parquet(os.path.join(dump_dir, "customer"))
+    orders = spark.read.parquet(os.path.join(dump_dir, "orders"))
+    assert orders.count() > 0
+    keys = {r.c_custkey for r in cust.select("c_custkey").collect()}
+    dumped = {r.o_custkey for r in orders.select("o_custkey").collect()}
+    assert dumped <= keys
+    # the key really was masked, on both sides
+    assert all(isinstance(k, str) and len(k) == 64 for k in keys)

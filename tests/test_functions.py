@@ -1188,31 +1188,55 @@ def test_dedup_clusters_jaccard_verify(docs):
     assert clusters2[2] == 1
 
 
-def test_dedup_clusters_unpersists_verify_caches(docs, monkeypatch):
-    """The verification stage's persist() handles must be released once
-    the verified pair set is materialized — a long-lived session running
-    many corpora must not accumulate dead cache entries."""
-    import greenmask_spark.functions.dedup as dd
+def test_dedup_clusters_leave_no_cache_entries(docs, spark):
+    """Verification persists nothing: after dedup_clusters and
+    fuzzy_dedup run, the session's cache manager holds no entries (a
+    long-lived session running many corpora must not accumulate dead
+    cache entries; the eager localCheckpoints these calls take are not
+    cache-manager entries and free with their frames)."""
+    from greenmask_spark.functions.dedup import dedup_clusters, fuzzy_dedup
 
-    captured = []
-    real = dd.ngram_jaccard
+    spark.catalog.clearCache()  # entries left by earlier tests
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    out = dedup_clusters(
+        docs, k=3, num_perm=8, bands=4, min_jaccard=0.5).collect()
+    kept = fuzzy_dedup(
+        docs, k=3, num_perm=8, bands=4, min_jaccard=0.5).collect()
+    assert len(out) == docs.count() and kept
+    assert cm.isEmpty()
 
-    def spy(*a, **kw):
-        out = real(*a, **kw)
-        captured.append(kw.get("_persisted"))
-        return out
 
-    monkeypatch.setattr(dd, "ngram_jaccard", spy)
-    dd.dedup_clusters(docs, k=3, num_perm=8, bands=4, min_jaccard=0.5).collect()
-    (handles,) = captured
-    assert len(handles) == 2 and all(not h.is_cached for h in handles)
-    # reuse plumbs through: recompute path never persists anything
-    captured.clear()
-    out = dd.dedup_clusters(
-        docs, k=3, num_perm=8, bands=4, min_jaccard=0.5, reuse="recompute"
-    ).collect()
-    (handles,) = captured
-    assert handles == [] and len(out) == docs.count()
+def test_fuzzy_dedup_evaluates_each_input_row_once(spark):
+    """fuzzy_dedup reads its input once: the signature pass, the
+    verification stream and the final anti-join all read one
+    materialization, so an expensive upstream step runs once per row."""
+    from pyspark.sql.types import StringType
+
+    from greenmask_spark.functions.dedup import fuzzy_dedup
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def tap(t):
+        calls.add(1)
+        return t
+
+    texts = ["the quick brown fox jumps over the lazy dog"] * 3 + [
+        "spark shuffles rows between executors",
+        "der hund und die katze sind nicht zu hause",
+        "minhash bands collide for similar sets",
+        "zebras graze quietly on open plains",
+        "parquet stores columns in row groups",
+        "a volcano erupted near the old village",
+        "jazz musicians improvise over chord changes",
+        "quantum bits hold superposed states",
+        "fresh bread smells wonderful every morning",
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).withColumn("text", F.udf(tap, StringType())("text"))
+    n = fuzzy_dedup(docs, k=3, num_perm=8, bands=4, min_jaccard=0.5).count()
+    assert n == 10  # one of the three identical docs survives
+    assert calls.value == 12
 
 
 def test_connected_components_nonconvergence_raises(spark):
