@@ -140,6 +140,23 @@ HEADLINE = [
 CANARY_FLOOR = 0.063
 
 
+def _query_contention(
+    names: list[str], canaries: list[float]
+) -> tuple[dict[str, float], list[str]]:
+    """Per-query contention evidence. ``canaries[i]`` is the checkpoint
+    taken just before ``names[i]`` and ``canaries[i + 1]`` the one just
+    after it. Returns each query's preceding checkpoint, and the queries
+    with a neighbouring checkpoint above 2x ``CANARY_FLOOR`` — this
+    catches load present at the start of a run, which the within-run
+    rule (compare with the best checkpoint so far) cannot see."""
+    before = {n: round(canaries[i], 3) for i, n in enumerate(names)}
+    flagged = [
+        n for i, n in enumerate(names)
+        if max(canaries[i:i + 2]) > 2.0 * CANARY_FLOOR
+    ]
+    return before, flagged
+
+
 def _canary(spark) -> float:
     """A fixed ~50ms CPU-bound Spark job (no IO, no shuffle): its
     runtime moves only with machine/JVM contention, so drift between
@@ -247,6 +264,7 @@ def main() -> int:
     # twice the idle-machine cost of the same fixed job.)
     above_floor = best > 2.0 * CANARY_FLOOR  # best == min(canaries)
     contended = contended or above_floor
+    query_canary, contended_queries = _query_contention(headline, canaries)
     out = {
         "metric": ("headline_queries_total" if not only
                    else "headline_queries_subset"),
@@ -260,7 +278,12 @@ def main() -> int:
             "max": round(max(canaries), 3),
             "floor": CANARY_FLOOR,
             "above_floor": above_floor,
+            "last": round(canaries[-1], 3),
         },
+        # the checkpoint run just before each query, and the queries
+        # next to a checkpoint above 2x the idle floor
+        "query_canary": query_canary,
+        "contended_queries": contended_queries,
         # boot-throughput reference, not a contention signal: compare
         # across recorded runs to normalize text-query drift
         "string_canary": string_canary,

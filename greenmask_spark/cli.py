@@ -374,7 +374,7 @@ def cmd_restore(args) -> int:
 def cmd_validate(args) -> int:
     from greenmask_spark.plan import apply_plan, build_plan, expand_references
     from greenmask_spark.validate import validate_plans
-    from greenmask_spark.validate.diff import diff_report
+    from greenmask_spark.validate.diff import diff_counts, diff_report
 
     cfg = load_config(args.config)
     spark = _spark("greenmask-spark-validate")
@@ -396,6 +396,7 @@ def cmd_validate(args) -> int:
     fatal = any(w.severity == "error" for w in warns)
     if not fatal:
         limit = args.rows_limit
+        diffs = {}
         for plan in plans:
             pk = list(pks.get(plan.table, ()))
             # unknown table already produced an ERROR warning above; if
@@ -403,12 +404,8 @@ def cmd_validate(args) -> int:
             if not pk or plan.table not in tables:
                 continue
             orig = tables[plan.table].limit(limit)
-            diff = diff_report(orig, apply_plan(orig, plan), pk)
-            changed = diff.filter("n_changed > 0")
-            report["tables"][plan.table] = {
-                "rows_checked": diff.count(),
-                "rows_changed": changed.count(),
-            }
+            transformed = apply_plan(orig, plan)
+            diffs[plan.table] = diff_report(orig, transformed, pk)
             if getattr(args, "format", "json") == "text":
                 from greenmask_spark.validate.text_render import (
                     render_diff_text,
@@ -422,7 +419,7 @@ def cmd_validate(args) -> int:
                        if isinstance(c, dict) and "name" in c}
                 )
                 print(render_diff_text(
-                    orig, apply_plan(orig, plan), pk,
+                    orig, transformed, pk,
                     affected=affected,
                     table_format=args.table_format,
                     with_diff=not args.no_diff,
@@ -430,6 +427,11 @@ def cmd_validate(args) -> int:
                     color=args.color,
                     table=plan.table,
                 ))
+        counts = diff_counts(list(diffs.values()))
+        for table, (rows, changed) in zip(diffs, counts):
+            report["tables"][table] = {
+                "rows_checked": rows, "rows_changed": changed,
+            }
     if getattr(args, "format", "json") != "text":
         print(json.dumps(report))
     elif warns:
@@ -572,6 +574,13 @@ def cmd_corpus(args) -> int:
     return 0
 
 
+def _non_negative_int(text: str) -> int:
+    n = int(text)
+    if n < 0:
+        raise argparse.ArgumentTypeError(f"must be >= 0, got {n}")
+    return n
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(
         prog="greenmask-spark",
@@ -603,7 +612,7 @@ def main(argv: list[str] | None = None) -> int:
 
     v = sub.add_parser("validate", help="static warnings + diff sample")
     v.add_argument("--config", required=True)
-    v.add_argument("--rows-limit", type=int, default=100)
+    v.add_argument("--rows-limit", type=_non_negative_int, default=100)
     v.add_argument("--format", choices=("json", "text"), default="json")
     v.add_argument("--table-format", choices=("horizontal", "vertical"),
                    default="horizontal")

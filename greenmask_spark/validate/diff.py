@@ -6,12 +6,21 @@ changed columns (and implicitly-changed ones: changed but not declared
 affected); schema diff vs a previous snapshot
 (pkg/toolkit/database_schema.go:26-63).
 
-Spark-first: one join on the PK + boolean change flags per column — a
-single shuffle on the PK (or zero when both sides share partitioning);
-the reference materializes row pairs through storage instead.
+``diff_report`` joins original and transformed rows on the PK and adds
+one null-safe change flag per column. ``validate`` diffs a ``limit(n)``
+sample of each table, and at that size Spark plans each side as a
+single-partition limit exchange feeding a broadcast join. The reference
+materializes row pairs through storage instead.
+
+``diff_counts`` summarises the diffs of every table at once: each diff
+becomes one aggregate row (its index, rows, changed rows), and the union
+of those rows is collected by one action, so all tables share one SQL
+execution instead of paying planning and job overhead per table.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,6 +55,25 @@ def diff_report(
         n_changed.cast("int").alias("n_changed"),
         *[flags[c].alias(f"chg_{c}") for c in cols],
     )
+
+
+def diff_counts(diffs: list[DataFrame]) -> list[tuple[int, int]]:
+    """``(rows, changed rows)`` of each ``diff_report`` frame, in input
+    order, from one ``collect()``. A row is changed when ``n_changed > 0``.
+    """
+    if not diffs:
+        return []
+    parts = [
+        d.agg(F.expr("count(*) AS rows"),
+              F.expr("count_if(n_changed > 0) AS changed"))
+        .selectExpr(f"{i} AS i", "rows", "changed")
+        for i, d in enumerate(diffs)
+    ]
+    got = {
+        r["i"]: (r["rows"], r["changed"])
+        for r in reduce(DataFrame.union, parts).collect()
+    }
+    return [got[i] for i in range(len(diffs))]
 
 
 def implicit_changes(

@@ -100,6 +100,104 @@ def test_cli_validate(spark, sf_dir, tmp_path, capsys):
     assert rep["tables"]["customer"]["rows_checked"] <= 50
 
 
+def _validate_cfg(sf_dir):
+    """Tables listed out of alphabetical order; a step that leaves some
+    rows unchanged; one table with no primary key."""
+    return {
+        "source": {"dir": sf_dir,
+                   "tables": ["orders", "lineitem", "nation", "customer"]},
+        "tables": [
+            {"name": "orders", "primary_key": ["o_orderkey"],
+             "transformers": [{"name": "Hash", "salt": "v1", "params": {
+                 "column": "o_orderpriority", "function": "sha256"}}]},
+            {"name": "lineitem",
+             "primary_key": ["l_orderkey", "l_linenumber"],
+             "transformers": [{"name": "Replace", "params": {
+                 "column": "l_returnflag", "value": "N"}}]},
+            {"name": "nation",
+             "transformers": [{"name": "SetNull", "params": {
+                 "column": "n_name"}}]},
+            {"name": "customer", "primary_key": ["c_custkey"],
+             "transformers": [{"name": "Hash", "salt": "v1", "params": {
+                 "column": "c_name", "function": "sha256"}}]},
+        ],
+    }
+
+
+def _sql_execution_ids(spark) -> set:
+    """Ids of the SQL executions in the session's status store, once the
+    listener bus has delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {execs.apply(i).executionId() for i in range(execs.size())}
+
+
+def test_cli_validate_counts_match_independent_diff(spark, sf_dir, tmp_path,
+                                                    capsys):
+    """Every table's rows_checked / rows_changed equal separate counts of
+    its diff; keys follow config order; a table with no PK is skipped."""
+    from greenmask_spark.plan import apply_plan, build_plan
+    from greenmask_spark.session import load_tables
+    from greenmask_spark.validate.diff import diff_report
+
+    cfg = _validate_cfg(sf_dir)
+    cfg_path = str(tmp_path / "cfg_counts.yml")
+    with open(cfg_path, "w") as fh:
+        yaml.safe_dump(cfg, fh)
+    assert main(["validate", "--config", cfg_path,
+                 "--rows-limit", "200"]) == 0
+    rep = json.loads(capsys.readouterr().out.strip().split("\n")[-1])
+    assert list(rep["tables"]) == ["orders", "lineitem", "customer"]
+
+    tables = load_tables(spark, sf_dir, tuple(cfg["source"]["tables"]))
+    pks = {t["name"]: t["primary_key"] for t in cfg["tables"]
+           if "primary_key" in t}
+    for plan in build_plan(cfg):
+        if plan.table not in pks:
+            continue
+        orig = tables[plan.table].limit(200)
+        diff = diff_report(orig, apply_plan(orig, plan), pks[plan.table])
+        assert rep["tables"][plan.table] == {
+            "rows_checked": diff.count(),
+            "rows_changed": diff.filter("n_changed > 0").count(),
+        }, plan.table
+    line = rep["tables"]["lineitem"]
+    assert 0 < line["rows_changed"] < line["rows_checked"] == 200
+
+
+def test_cli_validate_runs_one_sql_execution(spark, sf_dir, tmp_path,
+                                             capsys):
+    """The diffs of all tables are summarised by one action."""
+    cfg_path = str(tmp_path / "cfg_one_action.yml")
+    with open(cfg_path, "w") as fh:
+        yaml.safe_dump(_validate_cfg(sf_dir), fh)
+    before = _sql_execution_ids(spark)
+    assert main(["validate", "--config", cfg_path]) == 0
+    new = _sql_execution_ids(spark) - before
+    rep = json.loads(capsys.readouterr().out.strip().split("\n")[-1])
+    assert len(rep["tables"]) == 3
+    assert len(new) == 1, sorted(new)
+
+
+def test_cli_validate_rows_limit_must_not_be_negative(spark, sf_dir,
+                                                     tmp_path, capsys):
+    """A negative --rows-limit is a usage error (exit code 2); 0 checks
+    no rows."""
+    import pytest
+
+    cfg_path = str(tmp_path / "cfg_limit.yml")
+    with open(cfg_path, "w") as fh:
+        yaml.safe_dump(_cfg(sf_dir, str(tmp_path / "unused")), fh)
+    with pytest.raises(SystemExit) as exc:
+        main(["validate", "--config", cfg_path, "--rows-limit", "-1"])
+    assert exc.value.code == 2
+    assert "--rows-limit" in capsys.readouterr().err
+    assert main(["validate", "--config", cfg_path, "--rows-limit", "0"]) == 0
+    rep = json.loads(capsys.readouterr().out.strip().split("\n")[-1])
+    assert rep["tables"] == {
+        "customer": {"rows_checked": 0, "rows_changed": 0}}
+
+
 def test_cli_validate_fatal_on_bad_column(spark, sf_dir, tmp_path, capsys):
     cfg = _cfg(sf_dir, str(tmp_path / "unused"))
     cfg["tables"][0]["transformers"][0]["params"]["column"] = "no_such_col"
@@ -300,12 +398,22 @@ def test_validate_text_rendering(spark):
     assert "alice" not in plain and "xxxxx" in plain
 
 
-def test_validate_cli_text_format(spark, tmp_path, capsys):
+def test_validate_cli_text_format(spark, tmp_path, capsys, monkeypatch):
     """validate --format text renders a table document per configured
-    table."""
+    table, building each table's plan once."""
     import json as _json
 
     import greenmask_spark.cli as cli
+    import greenmask_spark.plan as plan_mod
+
+    calls = []
+    apply_plan = plan_mod.apply_plan
+
+    def counting_apply_plan(df, plan):
+        calls.append(plan.table)
+        return apply_plan(df, plan)
+
+    monkeypatch.setattr(plan_mod, "apply_plan", counting_apply_plan)
 
     src = str(tmp_path / "src")
     spark.createDataFrame(
@@ -328,6 +436,7 @@ def test_validate_cli_text_format(spark, tmp_path, capsys):
     assert rc == 0
     assert '"public"."people"' in out
     assert "OriginalValue" in out
+    assert calls == ["people"]
 
 
 def test_expand_env_vars_semantics():

@@ -51,3 +51,15 @@ def test_registry_has_100_rows():
     union coverage) assumes exactly 100 rows; a silent grow/shrink
     breaks the disjoint-window invariant."""
     assert len(entrymod.queries()) == 100
+
+
+def test_bench_flags_queries_next_to_a_slow_canary():
+    """Load present from the start of a run lifts the first checkpoints
+    only; the queries beside them are flagged, the rest are not."""
+    floor = bench.CANARY_FLOOR
+    names = ["a", "b", "c"]
+    canaries = [5 * floor, 2.5 * floor, floor, 1.1 * floor]
+    before, flagged = bench._query_contention(names, canaries)
+    assert before == {n: round(c, 3) for n, c in zip(names, canaries)}
+    assert flagged == ["a", "b"]
+    assert bench._query_contention(names, [floor] * 4)[1] == []
